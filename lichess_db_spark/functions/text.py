@@ -59,14 +59,6 @@ def word_shingles(col: Column | str, n: int = 5) -> Column:
     return F.when(F.size(ts) >= n, acc).otherwise(F.array().cast("array<string>"))
 
 
-def char_ngrams(col: Column | str, n: int = 8) -> Column:
-    """Character n-grams (for SimHash / fingerprinting)."""
-    c = F.col(col) if isinstance(col, str) else col
-    idx = F.sequence(F.lit(1), F.length(c) - n + 1)
-    grams = F.transform(idx, lambda i: F.substring(c, i, n))
-    return F.when(F.length(c) >= n, grams).otherwise(F.array().cast("array<string>"))
-
-
 def token_type_ratio(col: Column | str, ts: Column | None = None) -> Column:
     """distinct tokens / total tokens — a repetition-quality signal.
 

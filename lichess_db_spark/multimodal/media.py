@@ -312,14 +312,6 @@ def resize_images(
     return df.mapInPandas(run, schema=RESIZE_SCHEMA)
 
 
-def resize_stub(*_args, **_kwargs):
-    raise NotImplementedError(
-        "image resize requires PIL/opencv (absent in this container); "
-        "use resize_images where pillow is installed — the mapInPandas "
-        "contract matches decode_images"
-    )
-
-
 def read_media_dir(
     spark, path: str, glob: str = "*", recursive: bool = False
 ) -> DataFrame:

@@ -32,13 +32,6 @@ def with_proportion(
     return df.withColumn(alias, F.col(count_col) / total)
 
 
-def approx_distinct(df: DataFrame, *cols: str, rsd: float = 0.05) -> DataFrame:
-    """A2: HyperLogLog++ approximate distinct (eda.ipynb:cell5)."""
-    return df.agg(
-        *[F.approx_count_distinct(c, rsd=rsd).alias(f"approx_distinct_{c}") for c in cols]
-    )
-
-
 def decimal_sum(col: Column | str, scale: int = 4, alias: str | None = None) -> Column:
     """Order-independent sum of a double column via DECIMAL(30,scale).
 
@@ -154,15 +147,6 @@ def two_level_scaled_agg(
     if count_alias:
         finals.append(F.sum("__p_n").cast("bigint").alias(count_alias))
     return lvl1.groupBy(*keys).agg(*finals)
-
-
-def horizontal_sum(*cols: str) -> Column:
-    """A5: polars sum_horizontal -> plain column addition."""
-    out: Column | None = None
-    for c in cols:
-        out = F.col(c) if out is None else out + F.col(c)
-    assert out is not None
-    return out
 
 
 def profile_table(df: DataFrame) -> DataFrame:

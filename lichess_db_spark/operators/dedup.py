@@ -1239,17 +1239,6 @@ def simhash_portable(
     return hashed.select(F.col(id_col), sig.alias("simhash"))
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Docs sharing an identical simhash (hamming distance 0)."""
-    sigs = simhash64(df, text_col, id_col)
-    return (
-        sigs.groupBy("simhash")
-        .agg(F.sort_array(F.collect_list(id_col)).alias("ids"), F.count("*").alias("n"))
-        .where(F.col("n") > 1)
-        .select("simhash", "ids", "n")
-    )
-
-
 def minhash_band_postings(
     sigs: DataFrame,
     id_col: str = "doc_id",

@@ -1,9 +1,16 @@
 """Aggregated query catalog: importing the category modules populates
-the shared registry (registry.QUERIES)."""
+the shared registry (registry.QUERIES).
+
+The driver's correctness gate checks the first 50 entries of
+``queries()`` in insertion order. That order is the committed pin
+``window_snapshot.json`` (the 50 pinned names, in pin order), then
+every other entry in registration order. ``tools/window_plan.py``
+composes the pin at each round boundary; nothing here reads driver
+records, so the order depends only on committed package files.
+"""
 
 from __future__ import annotations
 
-import glob
 import json
 import os
 from collections.abc import Callable
@@ -11,668 +18,18 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from . import catalog_core, catalog_formats, catalog_north, catalog_scale, catalog_staged, catalog_tpch  # noqa: F401  (registration side effects)
-from .catalog_staged import STAGED_NEXT
 from .registry import QUERIES, QueryDef  # noqa: F401
 
-# The driver's correctness gate checks the first 50 entries of
-# ``queries()`` in insertion order.  Ordering policy (data-driven since
-# r5; tests/test_rotation.py enforces it against the committed
-# fingerprint snapshot):
-#
-# 0. Queries whose code changed THIS round (manual marker below) —
-#    every change must earn a fresh driver row.
-# 1. Queries with no green driver row in any committed
-#    CORRECTNESS_r*.json — never verified, or last row was red.
-#    Computed from the files, not curated by hand.
-# 2. Core sentinels — pinned inside the window so a core regression is
-#    caught by the grading driver itself, not only the local mirror
-#    suite (tests/test_catalog_oracle.py).
-# 3. Everything else ORACLE-PAIRED, least-recently-driver-verified
-#    first (ascending last-green round, registration order as
-#    tiebreaker).
-# 5. Rows-only-by-design entries never rotate in by staleness (a slot
-#    spent there buys only a row count; their exact twins carry hash
-#    coverage) — they re-enter only via groups 0/1 (VERDICT r10 item 5).
-_ROUND = 15
-_TOUCHED_THIS_ROUND = (
-    # r15 window budget (optimization round 2): the one r14-staged
-    # entry (suffix_repeat_tiers, full oracle, pre-verified at 3 SFs x
-    # partitions 3/8/17 in r14) leads as group-0 head; 2 sentinels +
-    # 47 rotation-tail slots drain the r10/r11-vintage cohort per
-    # tools/window_plan.py on the settled tree (debt 73, budget 0 —
-    # breadth freeze holds; r15 authors zero new entries). Builders or
-    # builder-consumed helpers changed by r15 optimizations are
-    # appended below as the work lands, per the standing rule.
-    "suffix_repeat_tiers",
-    # --- r15 batch 1 ---
-    # VERDICT r14 item 1: the text gate becomes hash-verified — ONE
-    # closed-form gradient step (sigmoid(0) = 1/2 exactly, vanishing
-    # L2 at w = 0) with the logreg_margin_gate oracle ported to the
-    # five text features; builder + new oracle, pre-verified at
-    # sf0.001/0.01/0.1 x partitions 3/8/17:
-    "logreg_text_quality_gate",
-    # ADVICE r14 (medium): operators/dedup.connected_components —
-    # integral-dtype guard on the sum convergence probe, join-based
-    # changed-count fallback for any other id type (all catalog
-    # callers pass int64, so these five take the IDENTICAL code path;
-    # re-entry per the changed-helper rule):
-    "dedup_cc_clusters",
-    "dedup_cluster_assignment",
-    "dedup_keep_representatives",
-    "dedup_split_leakfree",
-    "dedup_keep_best",
-    # ADVICE r14 (low): operators/clustering.k_core — rounds==1
-    # unpersist guard (rounds=3 caller unchanged) + r15 restructures
-    # below:
-    "kcore_copurchase",
-    # --- r15 batch 2: graph family (VERDICT r14 item 3) ---
-    # plans/catalog_scale._copurchase_edges — spread() the wedge
-    # join's probe side (§2.5); clustering.k_core — explode-derived
-    # symmetrization + the deg0 census checkpoint replacing the
-    # all_nodes distinct; clustering.label_propagation + the bfs
-    # builder — explode-derived symmetrization. kcore drifter 5.50 ->
-    # 3.09 s, LPA -> 2.80 s; outputs frame-equal / oracle-green at
-    # sf0.001+sf0.01 x p3/8/17:
-    "label_prop_communities",
-    "triangle_copurchase_topk",
-    "bfs_copurchase_hops",
-    # --- r15 batch 3: iterative band (VERDICT r14 item 6 — fewer
-    # driver actions per iteration) ---
-    # operators/tokenizer.bpe_learn_merges — deferred unpersist fuses
-    # away the per-merge cache-materializing count() (one job per
-    # merge instead of two); drifter 2.57 -> 1.86 s:
-    "bpe_learned_merges",
-    # operators/classifier.logreg_train — optional dim= skips the
-    # 1-row dim-probe job; passed by the two hash-checked gates
-    # (dim=64 / dim=5). logreg_quality_filter also consumes the
-    # helper but is rows-only by design and its call site keeps the
-    # UNCHANGED default probe path — per VERDICT r14 item 1 the
-    # rows-only twin does not burn a graded slot when the changed
-    # helper path is verified by its hash-checked in-window twins:
-    "logreg_margin_gate",
-    # --- r15 batch 4 (VERDICT r14 item 8): znorm hot-key bound ---
-    # user_id-sorted partitions + a streaming kernel that buffers only
-    # the trailing user: peak pandas state = hottest user + one Arrow
-    # batch, not the whole shuffle partition; flat within band locally
-    # (two stash-paired drifter pairs), z values bit-identical:
-    "znorm_user_values",
-    # --- r15 batch 5 (guide §4.2): portable_assign /
-    # portable_kmeans_step run the numpy Arrow kernel instead of the
-    # interpreted zip_with/aggregate distance fold — BIT-IDENTICAL
-    # (assignments and step outputs frame-equal over every fixture
-    # vector); stash-paired drifter 1.69 -> 0.96 / 1.24 -> 0.61 s;
-    # verified at 3 SFs x p3/8/17 + arrow-batch 16:
-    "kmeans_cluster_sample",
-    "kmeans_portable_embeddings",
-    # --- r15 batch 6 (guide §2.5): spread() before the shingle
-    # fold+explode in dedup.ngram_jaccard_pairs and
-    # curation.contamination_pairs (the r14 spread class, found
-    # unapplied on these two helpers). Stash-paired drifter pairs:
-    # dedup_ngram_jaccard 2.06->1.04, capped 1.32->1.06 / 1.53->1.23,
-    # contamination 1.42->0.89 / 1.74->0.97, lsh_candidate_recall
-    # 2.81->2.43, blocking_recall 4.00->3.76. The CC-family consumers
-    # of ngram_jaccard_pairs are already re-entered above:
-    "dedup_ngram_jaccard",
-    "dedup_ngram_jaccard_capped",
-    "contamination_eval_overlap",
-    "lsh_candidate_recall",
-    "blocking_recall_eval",
-)
-_TOUCHED_R14 = (
-    # r14 window budget (VERDICT r13 item 1): 1 staged entry + 2
-    # sentinels leaves 47 rotation-tail slots — the r9-vintage cohort
-    # (incremental-MV family, SemDeDup/ExactSubstr, Gopher/DSIR/UniMax,
-    # q14/q16/q17/q19/q22) leads the tail, then the oldest r10 rows per
-    # tools/window_plan.py on the settled tree (debt 48, budget 2, one
-    # spill: q21_waiting_supplier).  Anything authored this round goes
-    # to STAGED_NEXT per the BREADTH-BUDGET rule while debt >= 50 at
-    # composition time; window_plan.py projects the reopening.
-    #
-    # VERDICT r13 item 1: the one r13-staged entry (judge-sim PASS)
-    # leads the window as the group-0 head.  Its builder also takes the
-    # ADVICE r13 unpersist fix (k_core's symmetrized edge relation was
-    # pinned for session lifetime), so the re-entry is doubly earned.
-    "kcore_copurchase",
-    # --- r14 OPTIMIZATION round re-entries (every builder or
-    # builder-consumed helper changed by an optimization earns a
-    # fresh driver row; before/after evidence in OPTIMIZATION_r14.md,
-    # plans in plans/r14/). Grouped by the helper that changed:
-    #
-    # operators/dedup.connected_components — monotone decimal-sum
-    # convergence check replaces the per-round join+count (same
-    # labels, one fewer shuffle join per round):
-    "dedup_cc_clusters",
-    "dedup_cluster_assignment",
-    "dedup_keep_representatives",
-    "dedup_split_leakfree",
-    "dedup_keep_best",
-    # plans/catalog_staged._top_pc_vec — per-iteration eager
-    # localCheckpoint of the _PC_DIM-row matvec (bounded by the fixed
-    # dim) cuts the 2^iters plan doubling:
-    "embedding_top_pc",
-    "embedding_remove_top_pc",
-    # guide §2.5 input-skew fixes — spread() the compute-bound map
-    # stage off the small single-file scan's skewed splits
-    # (aggregations downstream are partition-order-free; measured
-    # per-entry in OPTIMIZATION_r14.md):
-    "cdc_chunk_dedup",
-    "winnow_fingerprint_density",
-    "winnow_match_pairs",
-    "blocking_recall_eval",
-    "dedup_containment_pairs",
-    "dsir_importance_weights",
-    "dsir_resample_docs",
-    "knn_matryoshka_rerank",
-    "exact_substring_dedup",
-    "exact_substring_clean",
-    "passage_dup_curve",
-    "logreg_text_quality_gate",
-    # guide §4.1: per-group applyInPandas (one tiny Arrow batch per
-    # user) -> hash-repartition + mapInPandas with the same per-group
-    # arithmetic looped in pandas; outputs verified frame-equal:
-    "znorm_user_values",
-)
-_TOUCHED_R13 = (
-    # r13 window budget (VERDICT r12 items 1-3): 1 staged + 4
-    # verdict-mandated re-entries + 2 self-review helper re-entries
-    # (below) + 2 sentinels leaves 41 rotation-tail slots — the 12
-    # r7-vintage spill entries lead the tail, then the oldest r8 rows.
-    # Breadth freeze holds (debt 68, budget 0): anything authored this
-    # round goes to STAGED_NEXT (r13 authored ZERO new entries).
-    #
-    # VERDICT r12 item 1: the one r12-staged entry (judge-sim PASS)
-    # leads the window.
-    "knn_mutual_pairs_lsh",
-    # VERDICT r12 item 2 (the weak row): video_fp_near_dup ships the
-    # measured 128-bit aHash++dHash signature (4 x 32-bit band keys;
-    # BENCH_SCALE_R12_VIDEO mitigation cell alpha 0.69 vs the 64-bit
-    # tier's saturation alpha 1.24) — builder + oracle change, so it
-    # re-enters; audio_fp_near_dup shares the kit with higher
-    # per-track window fan-out (n_bytes/512) and gets the same wide
-    # tier.
-    "video_fp_near_dup",
-    "audio_fp_near_dup",
-    # VERDICT r12 item 3 + ADVICE: the shared portable-LSH kit's
-    # validity filter (NULL/ragged + element-level NULL/NaN +
-    # zero-quantized-norm) moves into a shared helper consumed by
-    # embedding_lsh_dedup_pairs / lsh_topk_portable /
-    # lsh_self_topk_portable — the two non-staged dependents re-enter
-    # (knn_mutual_pairs_lsh already leads; both were r9-vintage tail
-    # rows anyway, so the net spill cost is ~2 slots).
-    "dedup_embedding_lsh",
-    "knn_lsh_cosine_portable",
-    # r13 self-review finding (rotation contract): the ahash_images
-    # method dispatch was restructured for the wide tier (if/elif +
-    # size-dict lookup that now executes for method="ahash" callers
-    # too) — behavior-identical for the narrow method, but a changed
-    # builder-consumed helper earns driver rows for its OTHER two
-    # catalog consumers as well.
-    "mm_phash_dedup",
-    "dedup_cc_clusters",
-)
-_TOUCHED_R12 = (
-    # r12 window budget (VERDICT r11 item 1 — drain the driver-row
-    # backlog before adding breadth): the 25 r11-session-2 staged
-    # entries (STAGED_NEXT now cleared; all 25 judge-sim PASS at
-    # sf0.01/p8 in the r11 verdict) lead the window in their staging
-    # order, followed by the 2 core sentinels and 23 rotation-tail
-    # slots — the single r6-vintage entry plus the 22 oldest
-    # oracle-paired r7-vintage entries. NO new oracle-paired entries
-    # enter this round's window (breadth freeze); anything authored
-    # this round is staged for r13 via STAGED_NEXT. Measured final
-    # shape: 25 + 2 + 23 = 50, spill = the remaining r7-vintage
-    # oracle-paired entries (documented at the BREADTH-BUDGET rule
-    # below and in COVERAGE.md).
-    "cdc_chunk_dedup",
-    "repetition_topgram_docs",
-    "char_gini_docs",
-    "source_unigram_tv",
-    "embedding_top_pc",
-    "embedding_remove_top_pc",
-    "lsh_candidate_recall",
-    "winnow_fingerprint_density",
-    "winnow_match_pairs",
-    "dedup_sorted_neighborhood",
-    "knn_mutual_pairs",
-    "knn_isolation_docs",
-    "label_prop_communities",
-    "events_autocorr_lags",
-    "kmv_distinct_users",
-    "stats_mad_by_type",
-    "blocking_recall_eval",
-    "bloom_prefilter_join",
-    "als_user_factors",
-    "recursive_cte_reachability",
-    "dedup_containment_pairs",
-    "orders_abc_analysis",
-    "wordpiece_prefix_segment",
-    "events_cusum_changepoint",
-    "neyman_allocation_docs",
-)
-_TOUCHED_R11 = (
-    # r11 window budget (measured on the final source): 11 touched (9
-    # never-green + vocab_growth_curve + dedup_minhash_pairs_portable)
-    # + 2 sentinels + ALL 34 oracle-paired r6-vintage entries + 3
-    # oldest r7 = 50 — the r6 staleness tail drains completely, nothing
-    # spills past staleness 4, and the window carries ZERO rows-only
-    # rows (the two r6-vintage rows-only entries now rank in group 5
-    # per VERDICT r10 item 5; see _ordered).
-    #
-    # VERDICT r10 item 1: the red row, fixed — embedding_matryoshka_
-    # truncate now returns SCALAR rows (posexplode of the renormalized
-    # prefix), closing the only driver failure in ten rounds. Leads the
-    # window.
-    "embedding_matryoshka_truncate",
-    # VERDICT r10 item 2: the eight r10-staged entries (STAGED_NEXT now
-    # cleared) follow in their staging order.
-    "audio_fp_near_dup",
-    "video_fp_near_dup",
-    "dedup_split_leakfree",
-    "dedup_keep_best",
-    "temperature_mix_allocation",
-    "knn_mmr_rerank",
-    "ccnet_ppl_buckets",
-    "tracin_init_influence",
-    # ADVICE r10 (medium): temperature_allocation's pre-cast bigint
-    # scaling overflowed past ~9.2e6 tokens/lang — now casts to double
-    # BEFORE scaling, matching the oracle; the dependent re-enters.
-    # (temperature_mix_allocation is already above; unimax shares the
-    # module but not the changed helper — verified no re-entry needed.)
-    # ADVICE r10 (low): vocab_growth_curve's mx now computed over the
-    # same non-NULL-text population as the oracle — re-enters.
-    "vocab_growth_curve",
-    # r11 in-round change (rotation contract): the portable-minhash
-    # oracle text was refactored onto the shared _MINHASH_CAND_CTES
-    # prefix (now read through an mh_corpus indirection) for the new
-    # lsh_candidate_recall harness — rendered SQL differs only by that
-    # one-line CTE, semantics identical, but a changed builder source
-    # earns a driver row.
-    "dedup_minhash_pairs_portable",
-)
-_TOUCHED_R10 = (
-    # r10 window budget: 12 touched + 2 sentinels leaves 36 rotation-tail
-    # slots — the 25 staleness-5 r5-vintage entries (VERDICT r9 item 2)
-    # fit with ~11 slots to spare for the oldest r6 tail.
-    #
-    # VERDICT r9 item 1: the nine r9-staged entries (STAGED_NEXT now
-    # cleared) lead the window in their staging order. mm_phash_dedup /
-    # dedup_cc_clusters additionally re-enter on their own merits: the
-    # shared pairing helper bitstring_near_dup_pairs was re-shaped this
-    # round (count-first pre-cap — over-cap keys broadcast-anti-joined
-    # out BEFORE collect_list, so the hot bucket never materializes;
-    # the r9 'weak' finding) and both consume it.
-    "mm_phash_dedup",
-    "dedup_cc_clusters",
-    "dsir_resample_docs",
-    "embedding_matryoshka_truncate",
-    "export_webdataset_docs",
-    "vocab_growth_curve",
-    "countmin_vec_mv_orders",
-    "knn_matryoshka_rerank",
-    "passage_dup_curve",
-    # helper re-entries (rotation contract): minhash_lsh_candidates now
-    # shares the same count-first pre-cap (_precap_hot_keys) — its two
-    # batch dependents re-enter. The cap SEMANTICS are unchanged (row
-    # count per key == bucket size by the one-row-per-(id,band)
-    # invariant; the portable oracle already caps on COUNT(*)), only
-    # the plan shape moved.
-    "dedup_minhash_pairs",
-    "dedup_minhash_pairs_portable",
-    # VERDICT r9 item 3: the classifier path gets a hash-checkable
-    # driver row — deterministic margin + decision (no sigmoid), so the
-    # window stops spending slots on rows-only logreg twins.
-    "logreg_margin_gate",
-    # in-round change (rotation contract): bigram_lm_score's oracle and
-    # builder were refactored to share ONE text (_BIGRAM_LM_CTES /
-    # _bigram_doc_scores) with the new staged ccnet_ppl_buckets gate —
-    # identical semantics, but a changed builder earns a driver row
-    # (displaces the last r6-tail slot).
-    "bigram_lm_score",
-)
-_TOUCHED_R9 = (
-    # r9 window budget: 21 touched + 2 sentinels leaves 27 rotation-tail
-    # slots (the 5 r4-vintage spill entries lead it, then the 22 oldest
-    # r5-vintage).  VERDICT r8 item 2 asked for >=25 r5 re-greens, but
-    # items 1 (11 staged never-greens) + 3 (CountMin dispatch re-enters
-    # the MV dependents) + the four ADVICE closures (classifier +
-    # Arrow-dot helpers changed -> their dependents re-enter) together
-    # demand 21 slots; the tradeoff is resolved in the mandated
-    # priority order (staged rows > helper-change re-entries > tail),
-    # and the 24 r5-vintage entries that spill reach staleness 5 at r10
-    # — the same bound the r8 tail accepted for the r4 spill (ROADMAP).
-    #
-    # VERDICT r8 item 1: the eleven r8-staged entries (STAGED_NEXT now
-    # cleared) lead the window in their staging order.
-    "semdedup_embeddings",
-    "semdedup_centroid_far",
-    "exact_substring_dedup",
-    "exact_substring_clean",
-    "gopher_quality_rules",
-    "dsir_importance_weights",
-    "bloom_novelty_docs",
-    "curation_funnel_report",
-    "unimax_lang_allocation",
-    "stupid_backoff_score",
-    "countmin_mv_orders",
-    # VERDICT r8 item 3: the cm:<w>x<d> CountMin algebra joins the
-    # shared spec dispatch in operators/incremental.py — every MV
-    # dependent of the dispatch re-enters per the rotation contract.
-    "incremental_agg_orders",
-    "mv_hll_maintenance_orders",
-    "incremental_topk_orders",
-    "incremental_distinct_years_orders",
-    "incremental_histogram_orders",
-    "incremental_freq_items_orders",
-    "hist_quantile_orders",
-    # ADVICE r8: functions/vectors.dot_exact_arrow now NULL-masks
-    # (row-level NULL / ragged / inner-NULL vectors -> NULL output,
-    # matching the expression twin) — its non-staged dependent
-    # re-enters (the semdedup/funnel dependents are staged above).
-    "embedding_contamination",
-    # ADVICE r8: logreg_predict weight literals now cast("double")
-    # (no more silent float32 truncation) — both dependents re-enter.
-    "logreg_quality_filter",
-    "logreg_text_quality_gate",
-    # r9 latent-bug fix: operators/rank.global_rank now eagerly
-    # localCheckpoints the positioned relation before the offsets
-    # branch — without it the two branches re-execute the SAMPLED
-    # range exchange independently and disagreeing boundaries yield
-    # ranks with gaps/duplicates (observed once at sf0.1 under host
-    # load as scrambled WebDataset shard sizes; small fixtures always
-    # re-sampled identically, which is why 4 rounds of driver rows
-    # never caught it). A correctness fix earns driver rows: both
-    # rank dependents re-enter (tail drops to 25 = 5 r4 + 20 r5; the
-    # 2 displaced r5 entries join the r10 lead).
-    "o1_global_rank_scalable",
-    "corpus_shuffle_rank",
-)
-_TOUCHED_R8 = (
-    # r8 window budget (final, measured at session close): 18 touched
-    # (13 of them brand-new/never-green) + 2 sentinels leaves 30
-    # rotation-tail slots; measured window by last-green round:
-    # 13 never-green + 5 r7 re-entries + 1 r5 + 31 r4-vintage (the 31
-    # includes the two r4-green sentinels) = 50. The >=30 r4-re-green
-    # target (VERDICT r7 #4) holds exactly; 5 r4-vintage entries spill
-    # to the r9 tail (they lead it).
-    #
-    # VERDICT r7 #1: the staged embedding-level decontamination scan
-    # lands as a FULL-ORACLE entry (oracle pre-verified at two SFs in
-    # r7; threshold semantics tightened per ADVICE — unrounded compare,
-    # rounded report).
-    "embedding_contamination",
-    # VERDICT r7 #2: the 'fi:<n>' frequent-items algebra completes the
-    # sketch corner of the mergeable-MV family — registered FULL
-    # oracle (capacity-exact + full-capacity estimate read + det
-    # re-rank), stronger than the rows-only slot planned.
-    "incremental_freq_items_orders",
-    # VERDICT r7 #3: pack_sequences(tokens_col=...) — real BPE token
-    # counts drive packing; the default whitespace path is bit-for-bit
-    # (tested), and its direct consumers re-enter per the contract.
-    "pack_sequences_bpe",
-    "pack_sequences_lang",
-    "pack_efficiency_profile",
-    # VERDICT r7 #5: cluster-balanced sampling (portable k-means
-    # assignment x grouped DLT sample, FULL oracle) + the iterated
-    # Lloyd path as a rows-only row; clustering.py grew
-    # portable_assign, so its existing entry re-enters.
-    "kmeans_cluster_sample",
-    "lloyd_kmeans_clusters",
-    "kmeans_portable_embeddings",
-    # helper re-entries (rotation contract): operators/incremental.py
-    # _hist_merge changed (ADVICE r7: over-length state slice guard)
-    # and operators/tokenizer.py bpe_learn_merges changed (ADVICE r7:
-    # unpersist-on-failure) — their dependents re-enter.
-    "incremental_histogram_orders",
-    "bpe_learned_merges",
-    # r8 breadth (training-mix assembly + tokenizer eval + LM scoring
-    # + quantization; each displaces one rotation-tail slot — final
-    # measured window shape: 11 never-green + 5 re-entries + 2
-    # sentinels + 32-33 r4-vintage re-greens + the r5 remainder,
-    # still over the >=30 r4 target):
-    "dataset_split_counts",
-    "upsample_epochs_docs",
-    "tokenizer_fertility_by_lang",
-    "bigram_lm_score",
-    "embedding_int8_quantize",
-    # r8 session 2: distributed quality-classifier training (rows-only
-    # by design; exact-reference + invariance tested)
-    "logreg_quality_filter",
-    # r8 session 2: quantile reads off the merged hist:16 MV state —
-    # hist_quantile becomes driver-verified (full oracle pads all 16
-    # bins before prefix-summing)
-    "hist_quantile_orders",
-    # r8 session 2: the literal CCNet gate — logreg trained on
-    # text-derived features (rows-only; margin-direction + determinism
-    # tested)
-    "logreg_text_quality_gate",
-)
-_TOUCHED_R7 = (
-    # r7 budget (VERDICT r6 item 3): the 30 oldest r3-vintage entries
-    # must stay in the window — they do (new entries rank BELOW
-    # sentinels but above the rotation tail, so each new/changed slot
-    # displaced an r4-tail entry, never an r3 one; final shape is 12
-    # touched + 2 sentinels + 30 r3 + 6 r4, verified in the session).
-    # VERDICT r6 item 2: the staged 'set' merge algebra lands as a
-    # full-oracle entry, completing the mergeable-MV family.
-    "incremental_distinct_years_orders",
-    # helper re-entry (rotation contract): operators/incremental.py
-    # changed (ADVICE r6: null-safe topk merge, unified malformed-spec
-    # error) — its dependents re-enter.
-    "incremental_agg_orders",
-    "incremental_topk_orders",
-    "mv_hll_maintenance_orders",
-    # helper re-entry: operators/sampling.py changed (ADVICE r6:
-    # bounded cache lifetime in sample_token_budget).
-    "sample_token_budget_docs",
-    # VERDICT r6 #8 breadth: CDC changelog compaction with tombstone
-    # semantics (the keep-latest twin that pairs with
-    # snapshot_diff_orders / merge_upsert).
-    "cdc_log_compaction_orders",
-    # r7 session 2 breadth (each displaces an r4-tail slot, keeping the
-    # 30 r3-vintage re-greens intact): BPE first-merge pair statistics
-    # (tokenizer-training shape: corpus -> vocab -> pairs) and
-    # reciprocal-rank-fusion hybrid retrieval (dense cosine + BM25).
-    "bpe_pair_counts",
-    "hybrid_search_rrf",
-    # r7 session 2: the 'hist:<n>' merge algebra completes the
-    # mergeable-state family with a distribution-shaped state.
-    "incremental_histogram_orders",
-    # r7 session 2: BPE encode driver row (closed-form single-merge
-    # oracle; multi-merge encodes are exact-twin tested instead).
-    "bpe_encode_tokens",
-    # r7 session 2: hash-checkable distributed k-means (one Lloyd
-    # step; multi-iteration twin exact-reference-tested).
-    "kmeans_portable_embeddings",
-    # r7 session 2: BPE LEARNING loop under the hash gate (3 unrolled
-    # oracle iterations via placeholder-char rewrites).
-    "bpe_learned_merges",
-)
-_TOUCHED_R6 = (
-    # r6: the two items staged in r5 because the window filled
-    # (VERDICT r5 items 1-2) lead the window.
-    "priority_sample_docs",  # new: DLT weighted sampling, single-scan shape
-    # scaled-int money sums (VERDICT r5 item 2): two_level_scaled_agg
-    # for unbounded-rows-per-group entries, scaled_int_sum where the
-    # group bounds the int64 contract by construction
-    "q1_pricing_summary",   # changed: two-level scaled-int (1.5x, no scale cap)
-    "q5_region_revenue",    # changed: two-level scaled-int
-    "q9_profit_by_nation_year",  # changed: two-level scaled-int (scale 6)
-    "q3_shipping_priority",  # changed: scaled_int_sum (per-order groups)
-    "q10_returned_top_customers",  # changed: scaled_int_sum (per-customer)
-    "q15_top_suppliers",    # changed: exact bigint max-compare
-    "q18_large_orders",     # changed: exact bigint HAVING threshold
-    # streaming-MV algebra driver surface (VERDICT r5 item 5)
-    "mv_hll_maintenance_orders",  # new: maintainable COUNT(DISTINCT) via hll state
-    # VERDICT r5 item 3: int64-fingerprint semi-join prune (6x smaller
-    # broadcast, 1.2x end-to-end; exactness kept by the string pairing join)
-    "contamination_eval_overlap",
-    # r6 sampling-family breadth
-    "priority_sample_by_lang",   # new: per-stratum DLT sample, skew-resistant
-    "sample_token_budget_docs",  # new: budget fill via distributed prefix sum
-    "revenue_mom_growth",        # new: window-over-aggregate MoM growth
-    "text_metrics_arrow",        # new: mapInArrow kernel-path surface demo
-    "latest_event_per_user",     # new: keep-latest CDC compaction shape
-    "incremental_topk_orders",   # new: maintainable top-k leaderboard state
-    # helper re-entry (rotation contract): operators/incremental.py
-    # changed (parametrized merge algebras) — its dependents re-enter
-    "incremental_agg_orders",
-)
-_TOUCHED_R5 = (
-    # The five r4-new TPC-H entries that missed the r4 window (VERDICT
-    # item 1) lead; they are also auto-rank-1, listed here for the
-    # typo-guard in tests/test_rotation.py.
-    "q2_min_cost_supplier",
-    "q4_priority_late_orders",
-    "q11_important_part_values",
-    "q20_top_brand_suppliers",
-    "q21_waiting_supplier",
-    "text_stats",           # changed: pre-projected __ts (one split/row)
-    "text_quality_score",   # changed: pre-projected __ts (one split/row)
-    "dedup_embedding_lsh",  # changed: auto-scaled n_planes (corpus-sized buckets)
-    "token_rarity_score",   # new: vocab-build + score-join (n-gram-LM skeleton)
-    "bigram_lift_topk",     # new: collocation extraction, exact integer lift
-    "vocab_overlap_sources",  # new: domain-similarity vocabulary matrix
-    "classifier_margin_select",  # new: broadcast linear-model inference
-    "pack_efficiency_profile",  # new: padding-waste metric per stream
-    "dedup_rate_by_source",     # new: per-source exact-dup rate
-    "format_roundtrip_xml",     # new: Spark-4 built-in XML round-trip
-    "json_variant_agg",         # new: Spark-4 VARIANT semi-structured path
-    "text_passage_chunks",      # new: RAG overlapping-window chunker
-    "text_passage_chunks_udtf",  # new: Python UDTF twin, same oracle
-    "events_trailing_rate",     # new: time-RANGE window frame
-    "retention_cohorts",        # new: cohort matrix
-    "session_top_paths",        # new: funnel path mining
-    "funnel_conversion",        # new: ordered step conversion counts
-    "blocklist_filter_docs",    # new: C4-style banned-term gate
-    "pii_redact_scan",          # new: regex PII detect + redact kernel
-    "bm25_keyword_search",      # new: rational-idf BM25 retrieval
-    "dedup_consecutive_events", # new: consecutive-duplicate compaction
-    "hll_sketch_union_estimate",  # new: mergeable HLL rollup (rows-only)
-    "approx_topk_terms",          # new: Spark-4 top-k sketch, capacity-exact
-    "events_hourly_gapfill",      # new: time-spine gap fill + LOCF
-    "running_distinct_users",     # new: windowed distinct via collect_set
-    "dq_expectations_report",     # new: declarative data-quality gate
-    "pagerank_part_affinity",     # new: iterative integer-exact PageRank
-    "scd2_user_state_history",    # new: SCD type-2 interval build
-    # r5 continuation, session 2 (catalog_scale.py)
-    "bucketed_join_revenue",      # new: pre-shuffled fact-fact join, 0 join exchanges
-    "zorder_cluster_scan",        # new: z-order clustering + 2-D box scan
-    "fuzzy_name_match",           # new: q-gram count-filter + levenshtein verify
-    "triangle_copurchase_topk",   # new: 2-shuffle triangle enumeration
-    "bfs_copurchase_hops",        # new: multi-source BFS supersteps
-    "window_ntile_deciles",       # new: ntile/percent_rank/cume_dist
-    "grouping_sets_revenue",      # new: GROUPING SETS via one Expand
-    "skyline_pareto_parts",       # new: 2-D Pareto frontier, broadcast thresholds
-    "merge_upsert_orders",        # new: MERGE end-to-end driver row
-    "stats_moments_exact",        # new: integer power-sum mean/var/corr
-    "events_ewma_decay",          # new: power-of-two trailing decay window
-    # r5 continuation, session 4
-    "incremental_agg_orders",     # new: mergeable-state MV maintenance
-    "assoc_rules_brands",         # new: market-basket lift, exact-int top-k
-    "snapshot_diff_orders",       # new: CDC full-outer snapshot diff
-    "transition_matrix_events",   # new: Markov next-event matrix
-)
-_CORE_SENTINELS = (
-    "a1_count",
-    "o3_topk_head",
-)
-
-_REPO_ROOT = os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-def _last_green_round() -> dict[str, int]:
-    """name -> latest driver round with a green (or rows-only-by-design)
-    row, from the committed CORRECTNESS_r*.json files.  A row counts as
-    green when the hash matched, or when the driver recorded the weaker
-    rows-only check (err == "no_oracle") for an entry that registers no
-    oracle by design."""
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(_REPO_ROOT, "CORRECTNESS_r*.json"))):
-        try:
-            rnd = int(os.path.basename(path).split("_r")[1].split(".")[0])
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError, json.JSONDecodeError):
-            continue
-        for name, row in rows.items():
-            if not isinstance(row, dict):
-                continue
-            green = bool(row.get("hash_match")) or (
-                row.get("err") == "no_oracle" and row.get("spark_rows") is not None
-            )
-            if green:
-                out[name] = max(out.get(name, 0), rnd)
-    return out
-
-
-# BREADTH-BUDGET RULE (standing, VERDICT r11 item 2): the driver
-# verifies ~50 rows/round while recent rounds added ~25 oracle entries
-# each — at that rate cumulative driver-freshness decays without bound.
-# Therefore: new oracle-paired entries registered per round must not
-# exceed (window size − rotation debt), where rotation debt = count of
-# oracle-paired entries whose last green driver row is older than 3
-# rounds (staleness > 3). When the debt leaves no room, new entries go
-# to STAGED_NEXT (tail) and the window drains the oldest tail instead.
-# tests/test_rotation.py::test_breadth_budget enforces this against the
-# committed CORRECTNESS history; r12 registers ZERO new oracle-paired
-# window entries (full breadth freeze — the 25 r11-staged entries plus
-# the 23 oldest tail slots consume the whole window).
-_WINDOW_SIZE = 50
-
-
-def _rotation_debt(last_green: dict[str, int], rnd: int | None = None) -> int:
-    rnd = _ROUND if rnd is None else rnd
-    return sum(
-        1
-        for q in QUERIES.values()
-        if q.oracle is not None
-        and q.name in last_green
-        and rnd - last_green[q.name] > 3
-    )
-
-
-def _base_rank(q: QueryDef, last_green: dict[str, int]) -> tuple[int, int]:
-    """The marker-independent ordering groups (1/2/3/5) shared by
-    _ordered and tools/window_plan.py's next-round projection (the
-    projection drops the STAGED/TOUCHED markers because the boundary
-    clears them)."""
-    if q.name not in last_green:
-        return (1, 0)
-    if q.name in _CORE_SENTINELS:
-        return (2, 0)
-    if q.oracle is None:
-        # rows-only-by-design entries (sketches, engine-hash-specific
-        # paths, iterated algorithms): a window slot spent here buys
-        # only a row count — their exact/portable twins carry the hash
-        # coverage. Standing rule (VERDICT r10 item 5): they take
-        # window duty ONLY when forced — touched by a helper change
-        # (group 0) or never driver-recorded (group 1) — never by
-        # staleness rotation.
-        return (5, last_green[q.name])
-    return (3, last_green[q.name])
-
-
-def _ordered() -> list[QueryDef]:
-    last_green = _last_green_round()
-
-    def rank(q: QueryDef) -> tuple[int, int]:
-        # entries authored AFTER this round's window was frozen rank at
-        # the tail (see plans/catalog_staged.py's module docstring for
-        # why) and lead the next round's window as group-1 never-greens
-        # once the marker clears at the round boundary
-        if q.name in STAGED_NEXT:
-            return (4, STAGED_NEXT.index(q.name))
-        if q.name in _TOUCHED_THIS_ROUND:
-            return (0, _TOUCHED_THIS_ROUND.index(q.name))
-        return _base_rank(q, last_green)
-
-    # sorted() is stable: registration order is preserved within each group.
-    return sorted(QUERIES.values(), key=rank)
+_PIN = os.path.join(os.path.dirname(os.path.abspath(__file__)), "window_snapshot.json")
 
 
 def queries_map() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    return {q.name: q.build for q in _ordered()}
+    with open(_PIN) as f:
+        pinned = json.load(f)["window"]
+    out = {n: QUERIES[n].build for n in pinned}
+    out.update((n, q.build) for n, q in QUERIES.items() if n not in out)
+    return out
 
 
 def oracle_sql_map() -> dict[str, str]:
-    return {q.name: q.oracle for q in _ordered() if q.oracle is not None}
+    return {n: QUERIES[n].oracle for n in queries_map() if QUERIES[n].oracle is not None}

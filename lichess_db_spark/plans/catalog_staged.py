@@ -1,15 +1,8 @@
-"""Entries staged for the NEXT driver round (rotation group 4).
+"""Catalog entries authored from round 8 on.
 
-Registered late in round 8, AFTER the r8 window was frozen and
-validated: the r7 VERDICT (#4) mandates >=30 r4-vintage re-greens in
-the 50-slot window and the final r8 window sits exactly at that floor,
-so a new never-green entry ranking into the window (ordering group 1)
-would displace a mandated re-green. These entries therefore rank at
-the catalog TAIL for the round they were authored in (``STAGED_NEXT``
-in plans/catalog.py) and lead the next round's window as group-1
-never-greens once the marker is cleared at the round boundary — the
-same staging discipline r7 used for embedding_contamination (oracle
-pre-verified at two SFs before its driver round).
+An ordinary category module: its entries rank like any other, by the
+committed pin ``window_snapshot.json`` (composed by
+``tools/window_plan.py``) and then registration order.
 
 Every entry here is full-oracle and pre-verified locally at sf0.01
 AND sf0.1 before commit (tests/test_catalog_oracle.py covers them via
@@ -23,18 +16,6 @@ from pyspark.sql import functions as F
 
 from ..io import load_table
 from .registry import register
-
-# names ranked at the catalog tail this round; plans/catalog.py clears
-# this at each round boundary (moving them into _TOUCHED_THIS_ROUND).
-# r13 boundary: knn_mutual_pairs_lsh moved into the r13 window
-# (VERDICT r12 item 1); entries registered AFTER the r13 window
-# freezes are staged here (breadth freeze: debt 68, budget 0).
-STAGED_NEXT: tuple[str, ...] = (
-    # r15 boundary: suffix_repeat_tiers (r14-staged) moved into the
-    # r15 window as the group-0 head (plans/catalog.py
-    # _TOUCHED_THIS_ROUND). r15 is an optimization round and authors
-    # ZERO new entries (breadth freeze: debt 73, budget 0).
-)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

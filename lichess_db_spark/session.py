@@ -73,13 +73,3 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "65536")
     )
     return builder.getOrCreate()
-
-
-def tune_for_sf(spark: SparkSession, approx_rows: int) -> None:
-    """Adjust runtime-settable knobs for a known input size.
-
-    At 100 TB these would instead be cluster-level settings; the
-    rule of thumb encoded here is ~128MB-per-shuffle-partition.
-    """
-    if approx_rows < 1_000_000:
-        spark.conf.set("spark.sql.shuffle.partitions", "32")

@@ -1574,7 +1574,7 @@ def test_connected_components_non_integral_ids(spark):
     assert got == {"9": "10", "10": "10", "7x": "10", "a": "a", "b": "a"}
 
 
-def test_znorm_stream_hot_user(spark):
+def test_znorm_stream_hot_user(spark, monkeypatch):
     """VERDICT r14 item 8: the znorm Python path must bound its
     buffered state by the hottest USER, not the whole shuffle
     partition. Drive the streaming kernel directly with a deliberately
@@ -1587,16 +1587,31 @@ def test_znorm_stream_hot_user(spark):
 
     # one partition's sorted stream: user 1 has 2 rows, user 2 is HOT
     # (1000 rows spanning many batches), user 3 has 1 row (dropped:
-    # n < 2), user 4 has 3 rows
+    # n < 2), user 4 has 3 rows, users 5..154 have 2 rows each (so the
+    # whole 1306-row partition exceeds the bound below)
     rows = (
         [(10, 1, 1.00), (11, 1, 3.00)]
         + [(100 + i, 2, float(i % 7)) for i in range(1000)]
         + [(2000, 3, 5.00)]
         + [(3000, 4, 1.00), (3001, 4, 2.00), (3002, 4, 6.00)]
+        + [(4000 + 2 * u + j, u, float(u % 5 + 2 * j)) for u in range(5, 155) for j in (0, 1)]
     )
     whole = pd.DataFrame(rows, columns=["event_id", "user_id", "value"])
     batches = [whole.iloc[i : i + 64] for i in range(0, len(whole), 64)]
-    got = pd.concat(list(_znorm_stream(iter(batches))), ignore_index=True)
+    # record the length of every frame the kernel itself concatenates
+    # (carry-over + next batch) while it runs
+    real_concat = pd.concat
+    seen = []
+
+    def recording_concat(*args, **kwargs):
+        out = real_concat(*args, **kwargs)
+        seen.append(len(out))
+        return out
+
+    monkeypatch.setattr(pd, "concat", recording_concat)
+    parts = list(_znorm_stream(iter(batches)))
+    monkeypatch.setattr(pd, "concat", real_concat)
+    got = pd.concat(parts, ignore_index=True)
     # reference: per-user closed form over the un-batched frame
     ref = pd.concat(
         [
@@ -1609,19 +1624,10 @@ def test_znorm_stream_hot_user(spark):
     assert got.sort_values("event_id").reset_index(drop=True).equals(
         ref.sort_values("event_id").reset_index(drop=True)
     )
-    # the bound: re-run instrumented — max buffered rows must stay
-    # under hot-user rows + one batch (1000 + 64), far below the
-    # 1069-row whole partition ONLY when batches are smaller than the
-    # partition; the structural claim is that carry-over == trailing
-    # user's rows so far, never the full concat of seen batches
-    seen = []
-    buf = None
-    for b in batches:
-        if buf is not None and len(buf):
-            b = pd.concat([buf, b], ignore_index=True)
-        last = b["user_id"].iloc[-1]
-        buf = b[b["user_id"] == last]
-        seen.append(len(b))
+    # the bound: the hot user spans many batches, so the kernel must
+    # carry it over; its buffer never exceeds the hot user's rows + one
+    # batch (1000 + 64), never the whole partition's concat
+    assert seen
     assert max(seen) <= 1000 + 64
 
 

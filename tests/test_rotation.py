@@ -1,36 +1,43 @@
 """Mechanized driver-window rotation invariant (VERDICT r4 item 2).
 
 The grading driver verifies only the first 50 entries of
-``queries()``.  The manual ``_TOUCHED_THIS_ROUND`` discipline in
-``plans/catalog.py`` worked in r3-r4 but was one forgotten edit away
-from silently-unverified code.  These tests make the invariant
-executable:
+``queries()``. ``plans/catalog.py`` returns the committed pin
+(``plans/window_snapshot.json``) first, in pin order, then every other
+entry in registration order. ``tools/window_plan.py`` composes the pin
+from the committed driver records and the builder fingerprints; it is
+the only reader of ``CORRECTNESS_r*.json``. These tests make the
+contract executable:
 
-1. every catalog entry whose builder source changed since the last
-   driver round (fingerprint differs from the committed snapshot, or
-   the entry is new) must sit inside the first-50 window;
-2. every entry with no green driver row in any committed
-   CORRECTNESS_r*.json must sit inside the window;
-3. the core sentinels must sit inside the window;
-4. the ``_TOUCHED_THIS_ROUND`` names must all resolve (typo guard).
+1. every entry whose builder source changed since the last driver
+   round (fingerprint differs from ``plans/catalog_fingerprints.json``,
+   or the entry is new) and every name in the pin's ``touched`` list
+   sits inside the pin;
+2. every entry with no green driver row before the pin's round, and
+   the core sentinels, sit inside the pin;
+3. the pin equals the tool's composition for the committed records,
+   and ``queries()`` starts with it;
+4. a driver record that lands mid-round changes neither the
+   composition nor ``queries()``.
 
-The snapshot (``plans/catalog_fingerprints.json``) is refreshed once
-per round boundary via ``python tools/catalog_fingerprint.py --write``.
+Refresh the pin with ``python tools/window_plan.py --write`` after a
+change, and open a new round with ``python tools/window_plan.py
+--boundary`` (which also refreshes the fingerprint snapshot).
 """
 
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
+import shutil
+import subprocess
 import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def _load_fingerprint_tool():
-    spec = importlib.util.spec_from_file_location(
-        "catalog_fingerprint", os.path.join(REPO, "tools", "catalog_fingerprint.py")
-    )
+def _load_tool(name):
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, "tools", f"{name}.py"))
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -43,55 +50,55 @@ def _catalog():
     return catalog
 
 
+def _entry_queries():
+    sys.path.insert(0, REPO)
+    import __spark_entry__
+
+    return list(__spark_entry__.queries())
+
+
 def test_touched_names_resolve():
     catalog = _catalog()
-    unknown = [n for n in catalog._TOUCHED_THIS_ROUND if n not in catalog.QUERIES]
-    assert not unknown, f"_TOUCHED_THIS_ROUND contains unregistered names: {unknown}"
-    unknown_sent = [n for n in catalog._CORE_SENTINELS if n not in catalog.QUERIES]
-    assert not unknown_sent, f"_CORE_SENTINELS contains unregistered names: {unknown_sent}"
+    plan = _load_tool("window_plan")
+    pin = plan.load_pin()
+    for field, names in (
+        ("touched", pin["touched"]),
+        ("window", pin["window"]),
+        ("CORE_SENTINELS", plan.CORE_SENTINELS),
+    ):
+        unknown = [n for n in names if n not in catalog.QUERIES]
+        assert not unknown, f"{field} contains unregistered names: {unknown}"
+    assert len(pin["window"]) == plan.WINDOW_SIZE == len(set(pin["window"]))
 
 
 def test_window_contains_touched_unverified_and_sentinels():
     catalog = _catalog()
-    window = set(list(catalog.queries_map())[:50])
+    plan = _load_tool("window_plan")
+    pin = plan.load_pin()
+    window = set(pin["window"])
 
-    missing_touched = [n for n in catalog._TOUCHED_THIS_ROUND if n not in window]
+    missing_touched = [n for n in pin["touched"] if n not in window]
     assert not missing_touched, f"touched entries outside driver window: {missing_touched}"
 
-    last_green = catalog._last_green_round()
-    never = [n for n in catalog.QUERIES if n not in last_green]
-    # STAGED_NEXT entries are never-green BY DESIGN this round: they
-    # were authored after the window was frozen at the mandated
-    # >=30-re-green floor and deliberately rank at the tail (see
-    # plans/catalog_staged.py); test_staged_entries_rank_at_tail pins
-    # their placement instead.
-    missing_never = [
-        n for n in never if n not in window and n not in catalog.STAGED_NEXT
-    ]
-    assert not missing_never, f"never-driver-verified entries outside window: {missing_never}"
+    last_green = plan.last_green_round(pin["round"])
+    never = [n for n in catalog.QUERIES if n not in last_green and n not in window]
+    assert not never, f"never-driver-verified entries outside window: {never}"
 
-    missing_sent = [n for n in catalog._CORE_SENTINELS if n not in window]
+    missing_sent = [n for n in plan.CORE_SENTINELS if n not in window]
     assert not missing_sent, f"core sentinels outside window: {missing_sent}"
 
 
 def test_changed_builders_reenter_window():
     """Any entry whose builder source drifted from the committed
-    snapshot must be in the first-50 window (add it to
-    _TOUCHED_THIS_ROUND), or the snapshot must be refreshed if the
-    driver already verified the new source."""
-    catalog = _catalog()
-    tool = _load_fingerprint_tool()
-    snap = tool.load_snapshot()
-    current = tool.current_fingerprints()
-
-    changed = [n for n, h in current.items() if snap.get(n) != h]
-    window = set(list(catalog.queries_map())[:50])
-    escaped = [
-        n for n in changed if n not in window and n not in catalog.STAGED_NEXT
-    ]
+    snapshot must be in the pinned first-50 window (recompose it with
+    ``python tools/window_plan.py --write``)."""
+    plan = _load_tool("window_plan")
+    changed = _load_tool("catalog_fingerprint").changed_entries()
+    window = set(plan.load_pin()["window"])
+    escaped = [n for n in changed if n not in window]
     assert not escaped, (
         f"builder source changed since last driver round but entry is outside "
-        f"the first-50 window: {escaped} — add to _TOUCHED_THIS_ROUND in plans/catalog.py"
+        f"the first-50 window: {escaped} — run python tools/window_plan.py --write"
     )
 
 
@@ -100,85 +107,77 @@ def test_ordering_is_deterministic():
     a = list(catalog.queries_map())
     b = list(catalog.queries_map())
     assert a == b
-    assert len(a) == len(set(a))
+    assert len(a) == len(set(a)) == len(catalog.QUERIES)
+    assert list(catalog.oracle_sql_map()) == [n for n in a if catalog.QUERIES[n].oracle is not None]
 
 
 def test_breadth_budget():
     """Standing BREADTH-BUDGET rule (VERDICT r11 item 2): new
     oracle-paired entries per round <= (window size - rotation debt),
     rotation debt = oracle-paired entries whose last green driver row
-    is older than staleness 3. 'New this round' = never-green and not
-    in _TOUCHED_THIS_ROUND (which carries the PRIOR round's staged
-    entries). When the debt leaves no budget, every new entry must be
-    in STAGED_NEXT (tail) so the window drains the oldest tail
-    instead."""
+    is older than staleness 3. 'New' = never green before the pin's
+    round. When the debt leaves no budget, new entries wait for a
+    later round."""
     catalog = _catalog()
-    lg = catalog._last_green_round()
-    budget = max(0, catalog._WINDOW_SIZE - catalog._rotation_debt(lg))
-    new_this_round = [
-        n
-        for n, q in catalog.QUERIES.items()
-        if q.oracle is not None
-        and n not in lg
-        and n not in catalog._TOUCHED_THIS_ROUND
-    ]
-    in_window_new = [n for n in new_this_round if n not in catalog.STAGED_NEXT]
-    assert len(in_window_new) <= budget, (
-        f"breadth budget exceeded: {len(in_window_new)} new oracle-paired "
-        f"entries rank into the window but rotation debt leaves a budget of "
-        f"{budget} — stage the excess in STAGED_NEXT: {in_window_new}"
+    plan = _load_tool("window_plan")
+    rnd = plan.load_pin()["round"]
+    lg = plan.last_green_round(rnd)
+    budget = plan.breadth_budget(lg, rnd)
+    new = [n for n, q in catalog.QUERIES.items() if q.oracle is not None and n not in lg]
+    assert len(new) <= budget, (
+        f"breadth budget exceeded: {len(new)} new oracle-paired entries but "
+        f"rotation debt leaves a budget of {budget}: {new}"
     )
-
-
-def test_staged_entries_rank_at_tail():
-    """STAGED_NEXT entries (authored after this round's window froze
-    at the mandated re-green floor) must: resolve, register a full
-    oracle, rank strictly AFTER the 50-slot driver window, and stay
-    out of _TOUCHED_THIS_ROUND (mutually exclusive markers)."""
-    catalog = _catalog()
-    names = list(catalog.queries_map())
-    for n in catalog.STAGED_NEXT:
-        assert n in catalog.QUERIES, f"STAGED_NEXT name does not resolve: {n}"
-        assert catalog.QUERIES[n].oracle is not None, (
-            f"staged entry {n} must be full-oracle (pre-verified at two SFs)"
-        )
-        assert names.index(n) >= 50, f"staged entry {n} leaked into the window"
-        assert n not in catalog._TOUCHED_THIS_ROUND
 
 
 def test_window_matches_committed_snapshot():
-    """The composed driver window is THE round deliverable: pin the
-    exact first-50 list to a committed snapshot so a late registration
-    or ordering change cannot silently reshuffle it between
-    pre-verification and the driver run. Refresh the snapshot (and
-    re-pre-verify the window) whenever the composition legitimately
-    changes: python - <<'PY'
-    import json; from lichess_db_spark.plans import catalog
-    json.dump({"round": catalog._ROUND,
-               "window": list(catalog.queries_map())[:50]},
-              open("lichess_db_spark/plans/window_snapshot.json", "w"), indent=1)
-    PY"""
-    import json
+    """The pin is the round's deliverable: it must equal the tool's
+    composition for the committed records, and queries() must start
+    with it, so nothing reshuffles the window between pre-verification
+    and the driver run. After a legitimate change, recompose it with
+    ``python tools/window_plan.py --write`` and re-pre-verify it."""
+    plan = _load_tool("window_plan")
+    pin = plan.load_pin()
+    assert plan.compose(pin) == pin["window"], (
+        "committed pin deviates from the composition for the committed "
+        "records — run python tools/window_plan.py --write (or --boundary "
+        "to open a new round) and re-pre-verify the window"
+    )
+    assert _entry_queries()[: plan.WINDOW_SIZE] == pin["window"]
 
+
+def test_driver_record_does_not_reorder_queries(tmp_path):
+    """A driver record for the pin's own round lands in the repo root
+    and greens the first tail entry. Neither the composition for the
+    committed pin nor queries() may change, and the tail stays in
+    registration order. The repo is copied to tmp_path so the real
+    root is never touched."""
     catalog = _catalog()
-    path = os.path.join(
-        REPO, "lichess_db_spark", "plans", "window_snapshot.json"
+    plan = _load_tool("window_plan")
+    pin = plan.load_pin()
+    before = _entry_queries()
+    assert before[: plan.WINDOW_SIZE] == pin["window"]
+    window = set(pin["window"])
+    assert before[plan.WINDOW_SIZE :] == [n for n in catalog.QUERIES if n not in window]
+
+    shutil.copytree(
+        os.path.join(REPO, "lichess_db_spark"), tmp_path / "lichess_db_spark",
+        ignore=shutil.ignore_patterns("__pycache__"),
     )
-    with open(path) as f:
-        snap = json.load(f)
-    assert snap["round"] == catalog._ROUND, (
-        "window snapshot is from another round — refresh it at the boundary. "
-        "NOTE (ADVICE r12): _last_green_round() reads CORRECTNESS_r*.json "
-        "from the repo root at runtime, so a newly-dropped driver record "
-        "re-ranks the live window; the record must land in the SAME commit "
-        "as the boundary refresh (_ROUND bump + window_snapshot.json + "
-        "catalog_fingerprints.json) so the tree never sits mismatched."
+    shutil.copy(os.path.join(REPO, "__spark_entry__.py"), tmp_path)
+    for name in os.listdir(REPO):
+        if name.startswith("CORRECTNESS_r") and name.endswith(".json"):
+            shutil.copy(os.path.join(REPO, name), tmp_path)
+    tail = before[plan.WINDOW_SIZE]
+    row = {"rows_match": True, "schema_match": True, "hash_match": True,
+           "spark_rows": 1, "oracle_rows": 1, "err": None}
+    (tmp_path / f"CORRECTNESS_r{pin['round']}.json").write_text(json.dumps({tail: row}))
+    assert plan.last_green_round(pin["round"] + 1, str(tmp_path))[tail] == pin["round"]
+
+    assert plan.compose(pin, str(tmp_path)) == pin["window"]
+    out = subprocess.run(
+        [sys.executable, "-c", "import json, __spark_entry__ as E; print(json.dumps(list(E.queries())))"],
+        cwd=tmp_path, env={**os.environ, "PYTHONPATH": str(tmp_path)},
+        capture_output=True, text=True, check=True,
     )
-    assert list(catalog.queries_map())[:50] == snap["window"], (
-        "live first-50 window deviates from the committed pin — if a new "
-        "CORRECTNESS_r*.json just landed, run the round-boundary procedure "
-        "(bump _ROUND, refresh window_snapshot.json + "
-        "catalog_fingerprints.json) in the same commit; if a builder "
-        "changed mid-round, add it to _TOUCHED_THIS_ROUND and re-refresh "
-        "the snapshot + re-pre-verify the window"
-    )
+    assert json.loads(out.stdout) == before

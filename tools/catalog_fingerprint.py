@@ -2,23 +2,26 @@
 
 Mechanizes the driver-window rotation invariant (VERDICT r4 item 2):
 any catalog entry whose implementing source changed since the last
-driver round must re-enter the first-50 driver window via
-``_TOUCHED_THIS_ROUND`` in ``plans/catalog.py``.
+driver round must re-enter the first-50 driver window.
+``tools/window_plan.py`` ranks every entry whose fingerprint differs
+from the committed snapshot first when it composes the window pin
+(``plans/window_snapshot.json``), and ``tests/test_rotation.py``
+checks that the pin holds them.
 
 The fingerprint of an entry is the md5 of ``inspect.getsource`` of its
 registered builder.  Because builders are registered via the
 ``@register(name, oracle, ...)`` decorator, the retrieved source spans
 the decorator call too, so the oracle SQL is covered by the same hash.
 (Helper functions a builder calls are NOT covered — a helper-only
-change still needs a manual ``_TOUCHED`` entry; the fingerprint is a
-backstop, not a replacement for review.)
+change still needs the entry in the pin's ``touched`` list; the
+fingerprint is a backstop, not a replacement for review.)
 
 Usage:
     python tools/catalog_fingerprint.py            # print current fingerprints
     python tools/catalog_fingerprint.py --write    # refresh the committed snapshot
 
-Run ``--write`` exactly once per round, at the round boundary (after
-the final commit's content is settled), so the next round's test
+``--write`` runs once per round, at the round boundary, as part of
+``python tools/window_plan.py --boundary``, so the next round's test
 compares against the state the driver actually verified.
 """
 
@@ -52,23 +55,33 @@ def load_snapshot() -> dict[str, str]:
         return json.load(f)
 
 
+def changed_entries() -> list[str]:
+    """Entries whose builder source differs from the committed snapshot
+    (or that the snapshot does not know yet)."""
+    try:
+        snap = load_snapshot()
+    except FileNotFoundError:
+        snap = {}
+    return [n for n, h in current_fingerprints().items() if snap.get(n) != h]
+
+
+def write_snapshot() -> None:
+    fps = current_fingerprints()
+    with open(SNAPSHOT, "w") as f:
+        json.dump(fps, f, indent=1, sort_keys=True)
+        f.write("\n")
+    print(f"wrote {len(fps)} fingerprints to {SNAPSHOT}")
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--write", action="store_true", help="refresh the committed snapshot")
     args = ap.parse_args()
-    fps = current_fingerprints()
     if args.write:
-        with open(SNAPSHOT, "w") as f:
-            json.dump(fps, f, indent=1, sort_keys=True)
-            f.write("\n")
-        print(f"wrote {len(fps)} fingerprints to {SNAPSHOT}")
+        write_snapshot()
     else:
-        try:
-            snap = load_snapshot()
-        except FileNotFoundError:
-            snap = {}
-        changed = [n for n, h in fps.items() if snap.get(n) != h]
-        print(json.dumps({"total": len(fps), "changed_vs_snapshot": changed}, indent=1))
+        total = len(current_fingerprints())
+        print(json.dumps({"total": total, "changed_vs_snapshot": changed_entries()}, indent=1))
 
 
 if __name__ == "__main__":
