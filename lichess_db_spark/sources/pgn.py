@@ -4,15 +4,17 @@ The reference parses PGN with a line state machine inside its
 download loop (ingester.py:113-235). Here the same semantics come in
 two forms:
 
-- ``parse_pgn_text(spark, path)``: the distributed parse. Each staged
-  chunk is read whole through the ``binaryFile`` source, split into
-  lines and assembled into games with array expressions (JVM-side),
-  then one ``posexplode`` emits a row per game. A game closes at its
-  moves line (any non-header, non-blank line); the header lines since
-  the previous moves line belong to it. The parse is map-only: no
-  shuffle.
+- ``parse_pgn_files(files)``: the distributed parse over rows of the
+  ``binaryFile`` source (batch or streaming). Each staged chunk is one
+  row, split into lines and assembled into games with array
+  expressions (JVM-side), then one ``posexplode`` emits a row per
+  game. A game closes at its moves line (any non-header, non-blank
+  line); the header lines since the previous moves line belong to it.
+  The parse is map-only: no shuffle. ``parse_pgn_text(spark, path)``
+  is its batch entry point; ``streaming.ingest.stream_games_ingest``
+  feeds it a ``readStream`` of the same source.
 - ``parse_pgn_partitions``: the imperative state-machine twin, for
-  per-partition Python paths (the streaming ingest's DataSource).
+  per-partition Python paths (the batch ``format("pgn")`` DataSource).
 
 Parallelism at 100 TB: one ``.pgn.zst`` month is a single
 non-splittable stream, so ``sources.staging`` first cuts it into
@@ -58,6 +60,10 @@ RAW_GAME_SCHEMA = StructType(
     + [StructField("Moves", StringType())]
 )
 
+# the binaryFile source's fixed schema; a streaming file source needs
+# it up front (no inference on readStream)
+BINARY_FILE_SCHEMA = "path STRING, modificationTime TIMESTAMP, length BIGINT, content BINARY"
+
 
 def parse_pgn_text(spark: SparkSession, path: str) -> DataFrame:
     """Distributed PGN parse: ZERO shuffles, contractual line order.
@@ -86,7 +92,14 @@ def parse_pgn_text(spark: SparkSession, path: str) -> DataFrame:
     construction) decodes in one task — the unit of parallelism is the
     chunk file, same as before, minus both shuffles.
     """
-    files = spark.read.format("binaryFile").load(path)
+    return parse_pgn_files(spark.read.format("binaryFile").load(path))
+
+
+def parse_pgn_files(files: DataFrame) -> DataFrame:
+    """Rows of the ``binaryFile`` source (``path``, ``content``) -> one
+    row per game: ``game_id`` (``path#index``), the header fields and
+    Moves. Pure column expressions, so the same plan serves a batch
+    read (``parse_pgn_text``) and a ``readStream`` micro-batch."""
     # _lines and _midx are materialized in SEPARATE projections: each
     # is referenced many times by downstream lambdas, and referencing
     # the raw expression there would re-evaluate it per element access

@@ -1,12 +1,15 @@
 """Spark 4 Python DataSource for PGN files (SURVEY.md §2.1 S1/S2
 optional upgrade): ``spark.read.format("pgn").load("dir/*.pgn")``.
 
-One partition per staged chunk file (chunks are cut at game
-boundaries by sources.staging, so files parse independently); each
-partition streams its file through the same line state machine the
-mapPartitions twin uses (parse_pgn_partitions). This is the idiomatic
-packaging of a custom text format in Spark 4 — the engine sees a real
-scan node with a schema, and downstream projection pruning works.
+A batch-only reader. One partition per staged chunk file (chunks are
+cut at game boundaries by sources.staging, so files parse
+independently); each partition streams its file through the
+imperative line state machine (parse_pgn_partitions). It is the
+Python twin of the JVM parse ``sources.pgn.parse_pgn_text``: the
+engine sees a real scan node with a schema, and tests read the same
+chunks both ways. The streaming ingest does not use it; it reads the
+``binaryFile`` file source and parses in the JVM
+(``streaming.ingest.stream_games_ingest``).
 
 Register once per session:
     from lichess_db_spark.sources.pgn_datasource import register_pgn_source
@@ -18,12 +21,7 @@ from __future__ import annotations
 import glob as _glob
 from dataclasses import dataclass
 
-from pyspark.sql.datasource import (
-    DataSource,
-    DataSourceReader,
-    InputPartition,
-    SimpleDataSourceStreamReader,
-)
+from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 from pyspark.sql.types import StructType
 
 from .pgn import HEADER_FIELDS, RAW_GAME_SCHEMA, parse_pgn_partitions
@@ -52,56 +50,10 @@ class PgnDataSourceReader(DataSourceReader):
                 yield tuple(game.get(c) for c in cols)
 
 
-class PgnStreamReader(SimpleDataSourceStreamReader):
-    """Streaming twin (T1, SURVEY §2.9): each staged chunk file that
-    appears under the glob becomes part of the next micro-batch —
-    the idiomatic replacement for the reference's hand-rolled
-    download-loop stream (ingester.py:109-139). Offsets are the count
-    of files already consumed (files are append-only per staging's
-    naming contract), so restart/replay is exact."""
-
-    def __init__(self, options: dict):
-        self.path = options.get("path")
-        if not self.path:
-            raise ValueError("pgn source requires a path")
-        # rate limit (T4 analogue of the file source's option): at most
-        # this many new chunk files per micro-batch; 0/absent = all.
-        self.max_files = int(options.get("maxFilesPerTrigger", 0)) or None
-
-    def _files(self) -> list[str]:
-        return sorted(_glob.glob(self.path))
-
-    def initialOffset(self) -> dict:
-        return {"n": 0}
-
-    def read(self, start: dict):
-        files = self._files()
-        new = files[start["n"]:]
-        if self.max_files is not None:
-            new = new[: self.max_files]
-        return iter(self._rows(new)), {"n": start["n"] + len(new)}
-
-    def readBetweenOffsets(self, start: dict, end: dict):
-        files = self._files()[start["n"]:end["n"]]
-        return iter(self._rows(files))
-
-    def _rows(self, files: list[str]) -> list[tuple]:
-        # a materialized list wrapped in iter(): the runtime's prefetch
-        # cache requires an iterator object but copy.copy()s it, which
-        # plain generators don't support (list_iterator does)
-        out = []
-        cols = [*HEADER_FIELDS, "Moves"]
-        for path in files:
-            with open(path, encoding="utf-8") as fh:
-                for game in parse_pgn_partitions(fh):
-                    out.append(tuple(game.get(c) for c in cols))
-        return out
-
-
 class PgnDataSource(DataSource):
     """`format("pgn")`: one row per game, schema = raw header strings
     + Moves (cleaning/typing happens in plans.games, same as every
-    other path). Supports both batch `read` and `readStream`."""
+    other path). Batch `read` only."""
 
     @classmethod
     def name(cls) -> str:
@@ -112,9 +64,6 @@ class PgnDataSource(DataSource):
 
     def reader(self, schema: StructType) -> PgnDataSourceReader:
         return PgnDataSourceReader(schema, self.options)
-
-    def simpleStreamReader(self, schema: StructType) -> PgnStreamReader:
-        return PgnStreamReader(self.options)
 
 
 def register_pgn_source(spark) -> None:

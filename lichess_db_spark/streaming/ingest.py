@@ -297,6 +297,10 @@ def running_features_tws(events: DataFrame) -> DataFrame:
     )
 
 
+# the persisted per-(Event, Player) state, read without inference
+FEATURE_STATE_SCHEMA = "Event STRING, Player STRING, n_type INT, elo_max INT, elo_max_faced INT"
+
+
 def _feature_state_of(games: DataFrame) -> DataFrame:
     """Cumulative per-(Event, Player) feature state from a (state-
     adjusted) canonical batch: the Spark analogue of the reference's
@@ -307,80 +311,6 @@ def _feature_state_of(games: DataFrame) -> DataFrame:
         F.max("Player_cum_games_type").cast("int").alias("n_type"),
         F.max("PlayerElo_max").cast("int").alias("elo_max"),
         F.max("PlayerElo_max_faced").cast("int").alias("elo_max_faced"),
-    )
-
-
-def _apply_feature_state(games: DataFrame, st: DataFrame) -> DataFrame:
-    """Offset a batch's within-batch running features by the prior
-    cumulative state — counts add, maxes floor — on BOTH the Player_*
-    and Opponent_* sides (same offsets keyed by Opponent preserve the
-    mirror invariant). Plain hash joins: state is |players|x|types|
-    rows, batch-fact sized at worst, and AQE broadcasts it when small.
-    """
-    totals = st.groupBy("Player").agg(
-        F.sum("n_type").cast("int").alias("n_total")
-    )
-    g = (
-        games.join(
-            st.select(
-                "Event", "Player",
-                F.col("n_type").alias("_p_nt"),
-                F.col("elo_max").alias("_p_em"),
-                F.col("elo_max_faced").alias("_p_emf"),
-            ),
-            ["Event", "Player"], "left",
-        )
-        .join(
-            totals.select("Player", F.col("n_total").alias("_p_ntot")),
-            ["Player"], "left",
-        )
-        .join(
-            st.select(
-                "Event",
-                F.col("Player").alias("Opponent"),
-                F.col("n_type").alias("_o_nt"),
-                F.col("elo_max").alias("_o_em"),
-                F.col("elo_max_faced").alias("_o_emf"),
-            ),
-            ["Event", "Opponent"], "left",
-        )
-        .join(
-            totals.select(
-                F.col("Player").alias("Opponent"),
-                F.col("n_total").alias("_o_ntot"),
-            ),
-            ["Opponent"], "left",
-        )
-    )
-    adj = (
-        g.withColumn(
-            "Player_cum_games_type",
-            (F.col("Player_cum_games_type") + F.coalesce("_p_nt", F.lit(0))).cast("int"),
-        )
-        .withColumn(
-            "Player_cum_games_total",
-            (F.col("Player_cum_games_total") + F.coalesce("_p_ntot", F.lit(0))).cast("int"),
-        )
-        .withColumn("PlayerElo_max", F.greatest("PlayerElo_max", "_p_em").cast("int"))
-        .withColumn(
-            "PlayerElo_max_faced", F.greatest("PlayerElo_max_faced", "_p_emf").cast("int")
-        )
-        .withColumn(
-            "Opponent_cum_games_type",
-            (F.col("Opponent_cum_games_type") + F.coalesce("_o_nt", F.lit(0))).cast("int"),
-        )
-        .withColumn(
-            "Opponent_cum_games_total",
-            (F.col("Opponent_cum_games_total") + F.coalesce("_o_ntot", F.lit(0))).cast("int"),
-        )
-        .withColumn("OpponentElo_max", F.greatest("OpponentElo_max", "_o_em").cast("int"))
-        .withColumn(
-            "OpponentElo_max_faced",
-            F.greatest("OpponentElo_max_faced", "_o_emf").cast("int"),
-        )
-    )
-    return adj.drop(
-        "_p_nt", "_p_em", "_p_emf", "_p_ntot", "_o_nt", "_o_em", "_o_emf", "_o_ntot"
     )
 
 
@@ -421,62 +351,68 @@ def stream_games_ingest(
     (E1) for the mode where month chunks keep arriving and full
     recompute per arrival is undesirable.
 
-    ``readStream.format("pgn")`` micro-batches arriving chunk files;
+    ``readStream.format("binaryFile")`` micro-batches arriving chunk
+    files, and each micro-batch is parsed in the JVM by the same
+    expressions as the batch parse (``sources.pgn.parse_pgn_files``);
     ``foreachBatch`` applies the SAME batch domain pipeline
     (clean -> unpivot -> features) to each micro-batch and appends to
     the year=/month= partitioned layout. foreachBatch rather than a
-    streaming-native plan because the pipeline's unpivot-union and
-    window features aren't append-mode streamable — per micro-batch
-    they run as ordinary batch jobs (the Spark-idiomatic escape hatch
-    for reusing a batch pipeline on a stream).
+    streaming-native plan because the pipeline's unpivot and window
+    features aren't append-mode streamable — per micro-batch they run
+    as ordinary batch jobs (the Spark-idiomatic escape hatch for
+    reusing a batch pipeline on a stream).
 
     Cross-batch cumulative state (reference parity: ``d_cum_games``
     restored at ingester.py:62-85, persisted at ingester.py:269-278):
     each batch's within-batch running features are OFFSET by a
     persisted per-(Event, Player) state table — counts add, Elo maxes
     floor — then the post-offset batch aggregates become the next
-    state version. State lives at ``{out_dir}/_feature_state/v{N}``
-    (underscore prefix: invisible to parquet readers of the output);
-    versions are batch ids, a reader takes the highest committed
-    version STRICTLY below its own id (a crashed batch's partial
-    state is never read, and a re-run overwrites its own version).
-    Like the reference, continuity assumes chunks arrive in event-time
-    order (months in order); a late month needs a batch recompute.
+    state version (merged with the prior one by a per-key max: every
+    state value only grows). State lives at
+    ``{out_dir}/_feature_state/v{N}`` (underscore prefix: invisible to
+    parquet readers of the output); versions are batch ids, a reader
+    takes the highest committed version STRICTLY below its own id (a
+    crashed batch's partial state is never read, and a re-run
+    overwrites its own version). Like the reference, continuity
+    assumes chunks arrive in event-time order (months in order); a
+    late month needs a batch recompute.
 
-    ``max_files_per_trigger`` rate-limits continuous mode
-    (``available_now=False``). With AvailableNow the Python DataSource
-    runtime falls back to single-batch execution (runtime warning), so
-    a backfill run consumes everything new as ONE batch per run —
-    month-at-a-time arrival means one run per month, as in the
-    reference's CLI loop (ingest_lichess.py:9-27).
+    ``max_files_per_trigger`` is the file source's
+    ``maxFilesPerTrigger``: at most that many new chunk files per
+    micro-batch, in both trigger modes (AvailableNow splits a backlog
+    into several batches). The file source orders new files by
+    modification time, so chunks must land with fresh ones, as
+    ``sources.staging`` writes them: after the first batch, a new file
+    more than the source's ``maxFileAge`` (7 days) older than the
+    newest file seen is skipped.
 
-    Exactly-once: the checkpoint tracks consumed chunk offsets, so a
-    restart neither re-ingests nor skips chunks (T3 via the state
-    store, not hand-rolled .json.zst snapshots). The output append
-    itself is at-least-once on a mid-write crash — same contract as
-    the reference's file writes.
+    Exactly-once: the file source's log in the checkpoint records the
+    chunk files each batch consumed, so a restart neither re-ingests
+    nor skips chunks (T3 via the checkpoint, not hand-rolled .json.zst
+    snapshots). Checkpoints written by the former Python ``pgn``
+    stream source cannot be resumed: start such an ingest on a fresh
+    checkpoint. The output append itself is at-least-once on a
+    mid-write crash — same contract as the reference's file writes.
     """
     from ..io import write_parquet
     from ..plans.games import games_pipeline
-    from ..sources.pgn_datasource import register_pgn_source
+    from ..sources.pgn import BINARY_FILE_SCHEMA, parse_pgn_files
 
-    register_pgn_source(spark)
-    reader = spark.readStream.format("pgn")
+    reader = spark.readStream.format("binaryFile").schema(BINARY_FILE_SCHEMA)
     if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    raw = reader.load(pgn_glob)
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    files = reader.load(pgn_glob)
     state_path = f"{out_dir}/_feature_state"
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        games = games_pipeline(batch_df, include_moves)
         prev, fs, path_cls = _latest_state_version(spark, state_path, batch_id)
         st = (
-            spark.read.parquet(f"{state_path}/v{prev}")
+            spark.read.schema(FEATURE_STATE_SCHEMA).parquet(f"{state_path}/v{prev}")
             if prev is not None
             else None
         )
-        if st is not None:
-            games = _apply_feature_state(games, st)
+        raw = parse_pgn_files(batch_df).drop("game_id")
+        games = games_pipeline(raw, include_moves, state=st)
         # the output write AND the state aggregation both consume the
         # full feature pipeline; persist so it executes once per batch
         games = games.persist()
@@ -491,12 +427,10 @@ def stream_games_ingest(
             )
             batch_state = _feature_state_of(games)
             if st is not None:
-                batch_state = batch_state.unionByName(
-                    st.join(
-                        batch_state.select("Event", "Player"),
-                        ["Event", "Player"],
-                        "left_anti",
-                    )
+                batch_state = (
+                    batch_state.unionByName(st)
+                    .groupBy("Event", "Player")
+                    .agg(*(F.max(c).alias(c) for c in ("n_type", "elo_max", "elo_max_faced")))
                 )
             batch_state.write.mode("overwrite").parquet(f"{state_path}/v{batch_id}")
         finally:
@@ -509,7 +443,7 @@ def stream_games_ingest(
                     fs.delete(status.getPath(), True)
 
     writer = (
-        raw.writeStream.foreachBatch(_process)
+        files.writeStream.foreachBatch(_process)
         .option("checkpointLocation", checkpoint_dir)
     )
     if available_now:

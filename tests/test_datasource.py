@@ -32,31 +32,31 @@ def test_pgn_format_matches_relational_parser(spark):
 
 
 def test_pgn_stream_reads_arriving_files(spark, tmp_path):
+    """The stream path (binaryFile file source -> JVM parse in
+    stream_games_ingest): a chunk that lands while the query runs is
+    picked up by the next micro-batch."""
     import shutil
-    import time
 
-    register_pgn_source(spark)
+    from lichess_db_spark.streaming.ingest import stream_games_ingest
+
     d = tmp_path / "stream"
     d.mkdir()
+    out = str(tmp_path / "games")
     shutil.copy(FIXTURE, d / "chunk_00000.pgn")
-    q = (
-        spark.readStream.format("pgn")
-        .load(str(d / "*.pgn"))
-        .writeStream.format("memory")
-        .queryName("pgn_stream")
-        .trigger(processingTime="500 milliseconds")
-        .start()
+    q = stream_games_ingest(
+        spark, str(d / "*.pgn"), out, str(tmp_path / "ckpt"), available_now=False
     )
     try:
-        deadline = time.time() + 60
-        while time.time() < deadline and spark.table("pgn_stream").count() < 6:
-            time.sleep(1)
-        assert spark.table("pgn_stream").count() == 6
+        q.processAllAvailable()
+        assert spark.read.parquet(out).count() == 12
         # a new staged chunk arrives -> next micro-batch picks it up
-        shutil.copy(FIXTURE, d / "chunk_00001.pgn")
-        deadline = time.time() + 60
-        while time.time() < deadline and spark.table("pgn_stream").count() < 12:
-            time.sleep(1)
-        assert spark.table("pgn_stream").count() == 12
+        text = open(FIXTURE, encoding="utf-8").read()
+        (d / "chunk_00001.pgn").write_text(
+            text.replace("lichess.org/", "lichess.org/x"), encoding="utf-8"
+        )
+        q.processAllAvailable()
+        assert spark.read.parquet(out).count() == 24
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+        assert len(batches) == 2, [p["numInputRows"] for p in q.recentProgress]
     finally:
         q.stop()

@@ -133,6 +133,36 @@ def test_mirrored_feature_consistency(raw_games):
     assert bad.count() == 0, bad.collect()
 
 
+def test_pipeline_is_one_lineage(spark, tmp_path):
+    """The opponent side comes from the same lineage (an ID window), not
+    a self-join: the executed plan scans the chunks once and joins
+    nothing. A game whose Site is ``?`` has a NULL ID; its rows are
+    dropped."""
+    text = open(FIXTURE, encoding="utf-8").read()
+    p = tmp_path / "chunk.pgn"
+    p.write_text(
+        text
+        + '[Event "Rated Blitz game"]\n[Site "?"]\n[White "mamalak"]\n'
+        '[Black "ghost"]\n[Result "1-0"]\n[UTCDate "2013.01.02"]\n'
+        '[UTCTime "10:00:00"]\n[WhiteElo "1400"]\n[BlackElo "1300"]\n\n'
+        "1. e4 e5 1-0\n\n",
+        encoding="utf-8",
+    )
+    raw = parse_pgn_text(spark, str(p))
+    assert raw.count() == 7
+    out = games_pipeline(raw.drop("game_id"))
+    rows = out.collect()
+    assert len(rows) == 12
+    assert all(r.ID is not None for r in rows)
+    assert not any(r.Player == "ghost" for r in rows)
+    # the adaptive plan prints its final plan, then the initial one
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    assert "isFinalPlan=true" in plan
+    assert plan.count("FileScan binaryFile") == 1, plan
+    assert "Join" not in plan, plan
+
+
 def test_multisplit_chunk_order_contract(spark, tmp_path):
     """Line order must come from file content, not partition ids: a
     chunk many times larger than maxPartitionBytes parses identically

@@ -99,8 +99,9 @@ def test_stream_games_ingest_matches_batch_pipeline(spark, tmp_path):
     stage = tmp_path / "stage"
     stage.mkdir()
     shutil.copy(fixture, stage / "chunk_00000.pgn")
-    # second chunk gets distinct game ids (duplicate IDs would fan out
-    # the opponent mirror-join — in batch mode too)
+    # second chunk gets distinct game ids (a duplicated ID would hand
+    # each of its rows the greatest of the other role's features — in
+    # batch mode too — so the copies would no longer be independent)
     text = open(fixture, encoding="utf-8").read()
     (stage / "chunk_00001.pgn").write_text(
         text.replace("lichess.org/", "lichess.org/x"), encoding="utf-8"
@@ -203,6 +204,86 @@ def test_stream_games_cross_batch_state(spark, tmp_path):
     alice_feb = got.where((F.col("ID") == "g3") & (F.col("Player") == "alice")).first()
     assert alice_feb.Player_cum_games_total == 3
     assert alice_feb.PlayerElo_max == 1520
+
+
+def _stream_matches_batch(spark, stage, got):
+    from lichess_db_spark.plans.games import games_pipeline
+    from lichess_db_spark.sources.pgn_datasource import register_pgn_source
+
+    register_pgn_source(spark)
+    want = games_pipeline(spark.read.format("pgn").load(str(stage / "*.pgn")))
+    cols = sorted(want.columns)
+    assert got.count() == want.count()
+    assert sorted(map(tuple, got.select(cols).collect())) == sorted(
+        map(tuple, want.select(cols).collect())
+    )
+
+
+def test_stream_games_unknown_event_continuity(spark, tmp_path):
+    """A ``[Event "?"]`` game cleans to a NULL Event; the state must
+    still carry that player's per-type count across months (the batch
+    windows group NULL Events together), so three one-game months
+    give Player_cum_games_type 1, 2, 3 as in the batch pipeline."""
+    from lichess_db_spark.streaming.ingest import stream_games_ingest
+
+    months = [
+        _mk_game(f"q{i}", "erin", f"opp{i}", 1500 + i, 1400, f"2024.0{i}.05", "10:00:00",
+                 event="?")
+        for i in (1, 2, 3)
+    ]
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    out = str(tmp_path / "games")
+    ckpt = str(tmp_path / "ckpt")
+    for i, text in enumerate(months):
+        (stage / f"chunk_{i:05d}.pgn").write_text(text, encoding="utf-8")
+        q = stream_games_ingest(spark, str(stage / "*.pgn"), out, ckpt)
+        q.awaitTermination(120)
+
+    got = spark.read.parquet(out)
+    erin = got.where(F.col("Player") == "erin").orderBy("DateTime").collect()
+    assert [r.Event for r in erin] == [None] * 3
+    assert [r.Player_cum_games_type for r in erin] == [1, 2, 3]
+    assert [r.PlayerElo_max for r in erin] == [1501, 1502, 1503]
+    _stream_matches_batch(spark, stage, got)
+
+
+def test_stream_games_max_files_per_trigger(spark, tmp_path):
+    """max_files_per_trigger=1 over two staged months in ONE
+    availableNow run: the file source splits the backlog into one
+    micro-batch per chunk (in modification-time order), so state
+    crosses a batch boundary inside the run; the output equals the
+    batch pipeline over both months."""
+    import os
+
+    from lichess_db_spark.streaming.ingest import stream_games_ingest
+
+    jan = _mk_game("m1", "alice", "bob", 1500, 1480, "2024.01.05", "10:00:00") + _mk_game(
+        "m2", "alice", "carol", 1510, 1490, "2024.01.20", "11:00:00"
+    )
+    feb = _mk_game("m3", "bob", "alice", 1485, 1520, "2024.02.03", "09:00:00") + _mk_game(
+        "m4", "carol", "dave", 1495, 1400, "2024.02.10", "12:00:00"
+    )
+    stage = tmp_path / "stage"
+    stage.mkdir()
+    for i, text in enumerate((jan, feb)):
+        dst = stage / f"chunk_{i:05d}.pgn"
+        dst.write_text(text, encoding="utf-8")
+        os.utime(str(dst), (1_700_000_000 + i * 10, 1_700_000_000 + i * 10))
+    out = str(tmp_path / "games")
+    q = stream_games_ingest(
+        spark, str(stage / "*.pgn"), out, str(tmp_path / "ckpt"), max_files_per_trigger=1
+    )
+    q.awaitTermination(120)
+
+    versions = [
+        p for p in os.listdir(os.path.join(out, "_feature_state")) if p.startswith("v")
+    ]
+    assert len(versions) >= 2, versions
+    got = spark.read.parquet(out)
+    alice_feb = got.where((F.col("ID") == "m3") & (F.col("Player") == "alice")).first()
+    assert alice_feb.Player_cum_games_total == 3
+    _stream_matches_batch(spark, stage, got)
 
 
 def test_tws_running_count_and_max_matches_batch(spark, staged_events):
